@@ -14,8 +14,12 @@ Re-implements (from behavior, not code) the reference's fuzzy matching stack:
 - the search entry points (``fuzzy_search[_chunks]``, ``iter_fuzzy_search_all``):
   ``utils/fuzzy.py:520-644``.
 
-Everything here is pure python+numpy; it runs inside Spark executors via
-Arrow-batched ``mapInPandas`` (see ``plans/pipeline.py``).
+It runs inside Spark executors via Arrow-batched ``mapInPandas`` (see
+``plans/pipeline.py``).  When the native library loads, the long-needle
+branch of ``fuzzy_search_chunks`` is one C call
+(``native.native_fuzzy_search_chunks``); everything else here is pure
+python+numpy, and the python path of that branch is the fallback without gcc
+and the reference the tests compare the C search against.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from .align import (
     local_matching_blocks,
     word_matching_blocks,
 )
+from .native import native_fuzzy_search_chunks
 
 IndexRange = Tuple[int, int]
 IsJunk = Callable[[str, int], bool]
@@ -642,6 +647,19 @@ def fuzzy_search_chunks(
         if fm.b_gap_ratio() < threshold:
             return None
         return ChunkedMatch([fm])
+    if isjunk is None or isjunk is positional_is_junk:
+        native_chunks = native_fuzzy_search_chunks(
+            haystack, needle, threshold, max_chunks, start_index
+        )
+        if native_chunks is not None:
+            if not native_chunks:
+                return None
+            return ChunkedMatch(
+                [
+                    FuzzyScore(original_haystack, needle, blocks, isjunk=positional_is_junk)
+                    for blocks in native_chunks
+                ]
+            )
     haystack_view = MaskedString.mask_junk(haystack, space_is_junk)
     needle_view = MaskedString.mask_junk(needle, space_is_junk)
     raw_chunks: Optional[List[MatchingBlocks]] = None

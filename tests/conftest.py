@@ -1,7 +1,29 @@
+import contextlib
 import re
 from typing import List, Optional
 
+import pytest
+
+from sciencebeam_trainer_grobid_tools_spark.kernel import native
 from sciencebeam_trainer_grobid_tools_spark.kernel.doc import Token, TokenizedDoc
+
+
+@contextlib.contextmanager
+def forced_python_kernel():
+    """Run the kernel without the native library: the pure-Python path that
+    is the fallback where gcc is missing and the reference the native search
+    is compared against."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(native, "get_native_lib", lambda: None)
+        yield
+
+
+@pytest.fixture
+def python_kernel():
+    """The forced-Python kernel path for one test (the native path is the
+    default whenever gcc is available)."""
+    with forced_python_kernel():
+        yield
 
 
 def tokens_for_text(text: str) -> List[str]:

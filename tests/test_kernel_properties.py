@@ -3,8 +3,13 @@
 The vectorized Smith-Waterman is checked against an independent scalar DP
 oracle (same scoring, straightforward O(n*m) python) on random inputs, plus
 structural invariants of the matching-block contract and the fuzzy search.
+The native fuzzy search is checked against the pure-Python path.
 """
 
+import random
+
+import pytest
+from conftest import forced_python_kernel
 from hypothesis import given, settings, strategies as st
 
 from sciencebeam_trainer_grobid_tools_spark.kernel.align import (
@@ -13,9 +18,12 @@ from sciencebeam_trainer_grobid_tools_spark.kernel.align import (
     MISMATCH_SCORE,
     local_matching_blocks,
 )
+from sciencebeam_trainer_grobid_tools_spark.kernel import native
 from sciencebeam_trainer_grobid_tools_spark.kernel.fuzzy import (
+    MIN_WINDOW_LENGTH,
     FuzzyScore,
     fuzzy_search,
+    fuzzy_search_chunks,
 )
 from sciencebeam_trainer_grobid_tools_spark.kernel.levenshtein import (
     levenshtein_distance,
@@ -115,3 +123,112 @@ def test_fuzzy_score_ratios_bounded(a, b):
     fm = FuzzyScore(a, b, blocks)
     assert 0.0 <= fm.b_gap_ratio() <= 1.0 + 1e-9 or fm.b_gap_ratio() >= 0
     assert fm.match_count() >= 0
+
+
+# whitespace the search masks, the junk characters it scores, non-ASCII
+# letters and one astral-plane letter (past the C isalpha table)
+SEARCH_ALPHABET = "abcdefgh abc\t\n*.,.\u00e9\u00df"
+ASTRAL_LETTER = "\U0001d4d0"
+
+
+def _search_text(rng: random.Random, length: int, astral_rate: float) -> str:
+    return "".join(
+        ASTRAL_LETTER if rng.random() < astral_rate else rng.choice(SEARCH_ALPHABET)
+        for _ in range(length)
+    )
+
+
+def _mutated(rng: random.Random, s: str) -> str:
+    chars = list(s)
+    for _ in range(rng.randint(0, max(1, len(chars) // 15))):
+        if chars:
+            chars[rng.randrange(len(chars))] = rng.choice(SEARCH_ALPHABET)
+    if chars and rng.random() < 0.3:
+        cut = len(chars) // 3
+        del chars[cut : cut + rng.randint(1, 5)]
+    return "".join(chars)
+
+
+def _chunk_blocks(result):
+    return None if result is None else [chunk.blocks for chunk in result.chunks]
+
+
+@pytest.mark.skipif(native.get_native_lib() is None, reason="needs gcc")
+@settings(max_examples=200, deadline=None)
+@given(
+    rng=st.randoms(use_true_random=False),
+    # masked lengths on both sides of the single-window limit
+    haystack_length=st.sampled_from(
+        [8, 40, 400, MIN_WINDOW_LENGTH - 10, MIN_WINDOW_LENGTH + 200, 2600]
+    ),
+    needle_kind=st.sampled_from(["piece", "two_pieces", "random"]),
+    astral_rate=st.sampled_from([0.0, 0.003]),
+    threshold=st.sampled_from([0.5, 0.8, 0.9, 1.0]),
+    max_chunks=st.integers(1, 3),
+    start_index=st.sampled_from([0, 0, 3, 17]),
+)
+def test_native_fuzzy_search_chunks_equals_python_path(
+    rng, haystack_length, needle_kind, astral_rate, threshold, max_chunks, start_index
+):
+    haystack = _search_text(rng, haystack_length, astral_rate)
+
+    def piece() -> str:
+        at = rng.randrange(max(1, len(haystack) - 5))
+        return _mutated(rng, haystack[at : at + rng.randint(3, 150)])
+
+    if needle_kind == "piece":
+        needle = piece()
+    elif needle_kind == "two_pieces":
+        needle = piece() + _search_text(rng, rng.randint(0, 20), 0.0) + piece()
+    else:
+        needle = _search_text(rng, rng.randint(5, 80), astral_rate)
+    kwargs = dict(threshold=threshold, max_chunks=max_chunks, start_index=start_index)
+    native_result = _chunk_blocks(fuzzy_search_chunks(haystack, needle, **kwargs))
+    with forced_python_kernel():
+        python_result = _chunk_blocks(fuzzy_search_chunks(haystack, needle, **kwargs))
+    assert native_result == python_result
+
+
+def _window_edge_case(rng: random.Random):
+    """A needle copied from across the first window's end, with an odd length
+    and threshold 0.5, so the edit allowance of the window size is an exact
+    .5 and round-half-to-even decides where the first window ends."""
+    needle_length = rng.choice([251, 301, 305, 401])
+    haystack = "".join(rng.choice("abcd") for _ in range(rng.randint(1900, 2600)))
+    at = rng.randint(1700, 1850)
+    needle = list(haystack[at : at + needle_length])
+    for _ in range(rng.randint(0, 30)):
+        needle[rng.randrange(len(needle))] = rng.choice("abcd")
+    return haystack, "".join(needle), dict(threshold=0.5, max_chunks=rng.randint(1, 2))
+
+
+def _mixed_case(rng: random.Random):
+    haystack = _search_text(
+        rng, rng.choice([30, 200, 700, MIN_WINDOW_LENGTH + 100, 1600, 3000]), 0.003
+    )
+
+    def piece() -> str:
+        at = rng.randrange(max(1, len(haystack) - 5))
+        return _mutated(rng, haystack[at : at + rng.randint(3, 150)])
+
+    needle = piece() + _search_text(rng, rng.randint(0, 20), 0.0) + piece()
+    return haystack, needle, dict(
+        threshold=rng.choice([0.5, 0.8, 0.9, 1.0]),
+        max_chunks=rng.randint(2, 3),
+        start_index=rng.choice([0, 0, 3, 17]),
+    )
+
+
+@pytest.mark.skipif(native.get_native_lib() is None, reason="needs gcc")
+@pytest.mark.parametrize("make_case, count", [(_window_edge_case, 120), (_mixed_case, 1500)])
+def test_native_fuzzy_search_chunks_seeded_sweep(make_case, count):
+    """A fixed sweep that reaches the rare quirks (window-relative first
+    chunks, the recursion start, half-to-even window rounding) more surely
+    than the shrinking search above."""
+    rng = random.Random(20261017)
+    for _ in range(count):
+        haystack, needle, kwargs = make_case(rng)
+        native_result = _chunk_blocks(fuzzy_search_chunks(haystack, needle, **kwargs))
+        with forced_python_kernel():
+            python_result = _chunk_blocks(fuzzy_search_chunks(haystack, needle, **kwargs))
+        assert native_result == python_result, (haystack, needle, kwargs)
