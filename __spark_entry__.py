@@ -577,16 +577,17 @@ def q_docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_docs_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates (kernel hash not SQL-portable: rows-only).
+    """MinHash+LSH near-dup candidates, xxhash64 family (the hash is not
+    SQL-portable: rows-only).
 
     ``persist_intermediate=False``: the signature table feeds its three
     consumers through ONE shuffle that Spark de-duplicates via
     ReusedExchange, so an explicit cache only adds memory-serialization
     cost here (measured 2.53s vs 1.73s noop at sf1.0) — and a per-invocation
     persist in a repeatedly-run query leaks cached blocks (the gate variant
-    already runs uncached for the same reason).  A multi-stage production
+    runs uncached for the same reason).  A multi-stage production
     pipeline materializes the signature table to storage instead
-    (documented on minhash_candidate_pairs)."""
+    (documented on dedup.minhash_candidate_pairs)."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
     return dedup.minhash_candidate_pairs(
         docs, k=5, num_hashes=32, bands=8, persist_intermediate=False
@@ -678,16 +679,18 @@ def q_docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_docs_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full MinHash+LSH banding pipeline with an oracle-portable hash
-    family (md5 minima, md5 band keys): signatures -> band buckets ->
+    """The full MinHash+LSH banding pipeline with the oracle-portable md5
+    hash family (md5 minima, md5 band keys): signatures -> band buckets ->
     candidate pairs -> exact-Jaccard verification, every value reproducible
-    in DuckDB.  Verifies the banding LOGIC the production xxhash64 path
-    (docs_minhash_near_dups) shares."""
+    in DuckDB.  It is the same function as the production xxhash64 path
+    (docs_minhash_near_dups) with only the hash family swapped, so this
+    check covers that path's banding logic too."""
     docs = _spread(_load(spark, sf_dir, "documents"), spark)
     # persist_intermediate=False: the gate runs every query repeatedly in one
     # session; an unreleased cache per invocation would accumulate blocks.
-    return dedup.portable_minhash_pairs(
-        docs, k=5, num_hashes=8, bands=4, persist_intermediate=False
+    return dedup.minhash_candidate_pairs(
+        docs, k=5, num_hashes=8, bands=4, persist_intermediate=False,
+        hash_family="md5",
     )
 
 

@@ -3,11 +3,12 @@
 All stages are Catalyst expressions (whole-stage codegen; no Python UDFs):
 
 - exact:     hash-groupBy on a normalized md5 fingerprint;
-- minhash:   word-shingles -> per-seed xxhash64 minima -> LSH band buckets ->
-             candidate pairs -> exact Jaccard verification.  The only shuffle
-             is the band-bucket groupBy, keyed by (band, band_hash) — at
-             10^12 docs this is the textbook near-dup plan (band count and
-             rows/band trade recall vs shuffle width);
+- minhash:   word-shingles -> per-seed minima (xxhash64 or md5 family) ->
+             LSH band buckets -> candidate pairs -> exact Jaccard
+             verification.  The band self-join shuffles only
+             (doc_id, band, band_hash) — at 10^12 docs this is the textbook
+             near-dup plan (band count and rows/band trade recall vs
+             shuffle width);
 - simhash:   per-token 64-bit hashes, bitwise majority vote folded to one
              long; near-dups = small hamming distance (cheap xor+popcount
              self-join within LSH-prefix buckets);
@@ -48,8 +49,9 @@ def word_shingles(text: Column, k: int = 5) -> Column:
     """Distinct k-word shingles of the normalized text (JVM-side arrays).
 
     String-building form — kept as the exact/portable baseline (the
-    ``docs_ngram_jaccard`` oracle compares these strings with DuckDB).  The
-    minhash scale path uses :func:`shingle_hashes` instead.
+    ``docs_ngram_jaccard`` oracle compares these strings with DuckDB).  It
+    uses an interpreted higher-order function; MinHash builds the same
+    shingles per exploded position instead (:func:`_shingle_table`).
     """
     tokens = F.split(normalized_text(text), " ")
     n = F.size(tokens)
@@ -64,75 +66,44 @@ def word_shingles(text: Column, k: int = 5) -> Column:
     )
 
 
-def shingle_hashes(text: Column, k: int = 5) -> Column:
-    """64-bit shingle identities without building shingle strings: one
-    multi-argument ``xxhash64`` over the k token positions per offset.
-
-    Versus the string form this skips the per-shingle ``slice`` +
-    ``concat_ws`` allocation (the round-1 hot spot: ~2.5s/5000 docs), and —
-    unlike an explode+window construction — stays map-side: nothing is
-    shuffled until the per-document signature minima, which combine
-    partially.  MinHash minima are identical over a multiset, so no
-    ``array_distinct`` is needed.
-    """
-    tokens = F.split(normalized_text(text), " ")
-    n = F.size(tokens)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.xxhash64(*[F.element_at(tokens, i + j) for j in range(k)]),
-        ),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", tokens))))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as an array expression (per seed, the minimum
-    xxhash64 over the shingles).  NOTE: higher-order array functions are
-    interpreted, not codegen'd — prefer ``minhash_signature_table`` (explode +
-    grouped min aggregates, fully codegen'd with map-side combine) on large
-    inputs."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)))
-            )
-            for seed in range(num_hashes)
-        ]
-    )
+# MinHash hash families as data: SQL templates for the shingle identity
+# ``g`` (over the positional table of :func:`_shingle_table`), the
+# per-seed signature minimum over ``g`` and the band key over signature
+# slots.  ``xxhash64`` is the production family: 64-bit shingle identities
+# from one multi-argument hash over the k token slots, so no shingle string
+# is built.  ``md5`` keeps every value reproducible in ANSI SQL/DuckDB (the
+# family the oracle gate hash-checks): string shingles, lexicographic
+# minima of ``md5(seed || ':' || shingle)`` hex strings and ``md5`` of the
+# band's minima joined by ','.
+_MINHASH_FAMILIES = {
+    "xxhash64": (
+        "CASE WHEN n >= {k} THEN xxhash64({slots})"
+        " ELSE xxhash64(concat_ws(' ', toks)) END",
+        "min(xxhash64(g, {seed}))",
+        "xxhash64({slots})",
+    ),
+    "md5": (
+        "concat_ws(' ', slice(toks, i, {k}))",
+        "min(md5(concat_ws(':', '{seed}', g)))",
+        "md5(concat_ws(',', {slots}))",
+    ),
+}
 
 
-def minhash_signature_table(
-    shingled: DataFrame, num_hashes: int = 32, shingle_col: str = "shingles"
+def _shingle_table(
+    df: DataFrame, id_col: str, text_col: str, k: int, shingle: str
 ) -> DataFrame:
-    """(doc_id, shingles) -> (doc_id, sig array): explode the shingles
-    (string or 64-bit hash identities) and take per-seed grouped minima —
-    whole-stage-codegen aggregation with map-side partial combine, one
-    shuffle keyed by doc_id."""
-    exploded = shingled.select("doc_id", F.explode(shingle_col).alias("shingle"))
-    mins = exploded.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(seed))).alias("h%d" % seed)
-            for seed in range(num_hashes)
-        ]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col("h%d" % seed) for seed in range(num_hashes)]).alias("sig")
-    )
+    """(id, text) -> one row per k-shingle position: (doc_id, g), where
+    ``g`` is the ``shingle`` template over the token slots
+    ``element_at(toks, i + j)`` (``n`` tokens, shingle start ``i``).
 
-
-def shingle_hash_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5
-) -> DataFrame:
-    """(id, text) -> one row per shingle position: (doc_id, g) where ``g`` is
-    the multi-arg xxhash64 over the k tokens at that position.
-
-    This is the codegen'd construction: explode a position sequence and hash
-    token slots directly.  The array-HOF form (``transform(sequence(...))``)
-    computes identical hashes but is INTERPRETED — measured 8.4s vs 0.2s for
-    5,000 documents at sf0.1 — because Catalyst does not codegen lambda
-    higher-order functions.  Duplicate positions are fine: minima ignore
-    multiplicity and the shingle *set* is taken downstream."""
+    A text shorter than k tokens gets the one row ``i = 1``; the shingle
+    templates then take the whole text as its single shingle.  Exploding a
+    position sequence and reading token slots stays inside whole-stage
+    codegen; the array-HOF form (``transform(sequence(...))``) computes the
+    same shingles but is INTERPRETED (measured 8.4s vs 0.2s for 5,000
+    documents at sf0.1) because Catalyst does not codegen lambda
+    higher-order functions."""
     tokens = F.split(normalized_text(F.col(text_col)), " ")
     toked = df.select(
         F.col(id_col).alias("doc_id"), tokens.alias("toks"), F.size(tokens).alias("n")
@@ -145,95 +116,19 @@ def shingle_hash_table(
             "i"
         ),
     )
-    g = F.when(
-        F.col("n") >= k,
-        F.xxhash64(*[F.element_at("toks", F.col("i") + j) for j in range(k)]),
-    ).otherwise(F.xxhash64(F.concat_ws(" ", "toks")))
-    return pos.select("doc_id", g.alias("g"))
+    slots = ", ".join("element_at(toks, i + %d)" % j for j in range(k))
+    return pos.select("doc_id", F.expr(shingle.format(k=k, slots=slots) + " AS g"))
 
 
-def _minhash_pairs_sql(
-    id_col: str, text_col: str, k: int, num_hashes: int, bands: int
-) -> str:
-    """The whole uncached candidate-pair pipeline as ONE SQL string.
-
-    Expression-for-expression the same query the Column-API path below
-    builds (tokenize -> positional xxhash64 shingles -> combined
-    collect_set + per-seed-minima aggregate with the pruning-barrier zero
-    terms -> id-only band self-join -> exact-Jaccard verification), but a
-    single driver call: the Column form crossed py4j ~1,000 times and cost
-    ~0.2 s of driver time per construction (values identical — equality
-    pinned by test and oracle at three scale factors)."""
-    rows_per_band = num_hashes // bands
-    shingle_args = ", ".join("element_at(toks, i + %d)" % j for j in range(k))
-    mins = ", ".join(
-        "min(xxhash64(g, %d)) AS h%d" % (s, s) for s in range(num_hashes)
-    )
-    sig_array = ", ".join("h%d" % s for s in range(num_hashes))
-    band_structs = ", ".join(
-        "struct(%d + least(0, size(shingles)) AS band, xxhash64(%s) AS band_hash)"
-        % (
-            b,
-            ", ".join(
-                "element_at(sig, %d)" % (b * rows_per_band + r + 1)
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    return """
-WITH toked AS (
-  SELECT `{id_col}` AS doc_id,
-         split(lower(replace(`{text_col}`, '\\n', ' ')), ' ') AS toks
-  FROM {{corpus}}
-),
-pos AS (
-  SELECT doc_id, toks, n,
-         explode(sequence(1, greatest(n - {km1}, 1))) AS i
-  FROM (SELECT doc_id, toks, size(toks) AS n FROM toked)
-),
-per_shingle AS (
-  SELECT doc_id,
-         CASE WHEN n >= {k} THEN xxhash64({shingle_args})
-              ELSE xxhash64(concat_ws(' ', toks)) END AS g
-  FROM pos
-),
-sig_shingles AS (
-  SELECT doc_id, shingles, array({sig_array}) AS sig
-  FROM (SELECT doc_id, collect_set(g) AS shingles, {mins}
-        FROM per_shingle GROUP BY doc_id)
-),
-buckets AS (
-  SELECT doc_id, bucket.band AS band, bucket.band_hash AS band_hash
-  FROM sig_shingles
-  LATERAL VIEW explode(array({band_structs})) t AS bucket
-),
-pairs AS (
-  SELECT DISTINCT l.doc_id AS doc_id_a, r.doc_id AS doc_id_b
-  FROM buckets l JOIN buckets r
-    ON l.band = r.band AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id
-),
-shingled AS (
-  SELECT doc_id,
-         slice(shingles, 1, size(shingles) + pmod(xxhash64(sig), 1)) AS shingles
-  FROM sig_shingles
-)
-SELECT p.doc_id_a, p.doc_id_b,
-       round(size(array_intersect(sa.shingles, sb.shingles))
-             / size(array_union(sa.shingles, sb.shingles)), 6) AS jaccard
-FROM pairs p
-JOIN shingled sa ON p.doc_id_a = sa.doc_id
-JOIN shingled sb ON p.doc_id_b = sb.doc_id
-""".format(
-        id_col=id_col,
-        text_col=text_col,
-        k=k,
-        km1=k - 1,
-        shingle_args=shingle_args,
-        sig_array=sig_array,
-        mins=mins,
-        band_structs=band_structs,
-    )
+def shingle_hash_table(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5
+) -> DataFrame:
+    """(id, text) -> one row per shingle position: (doc_id, g) where ``g`` is
+    the multi-arg xxhash64 over the k tokens at that position (the
+    ``xxhash64`` MinHash family's shingle identity).  Duplicate positions
+    are kept: repetition counts need them, minima ignore multiplicity and
+    MinHash takes the shingle *set* downstream."""
+    return _shingle_table(df, id_col, text_col, k, _MINHASH_FAMILIES["xxhash64"][0])
 
 
 def minhash_candidate_pairs(
@@ -244,277 +139,112 @@ def minhash_candidate_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     persist_intermediate: bool = True,
+    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs,
-    then candidates are verified with exact shingle Jaccard.
+    then candidates are verified with exact shingle Jaccard.  Returns
+    ``(doc_id_a, doc_id_b, jaccard)`` with ``doc_id_a < doc_id_b``.
 
-    Shingles are 64-bit hash identities (:func:`shingle_hash_table`) —
-    Jaccard over hashed shingles equals string-shingle Jaccard up to
-    negligible collision probability, and the exploded construction stays
-    inside whole-stage codegen (the array-HOF form was 38x slower)."""
-    if not persist_intermediate:
-        # the uncached pipeline is pure dataflow — build it as one SQL
-        # string (:func:`_minhash_pairs_sql`) for a single driver
-        # round-trip; the cached form below needs the DataFrame handle to
-        # persist the signature table mid-pipeline
-        return df.sparkSession.sql(
-            _minhash_pairs_sql(id_col, text_col, k, num_hashes, bands),
-            corpus=df,
+    One plan for every hash family (see ``_MINHASH_FAMILIES``): tokenize ->
+    positional shingle explode -> ONE aggregate (collect_set + per-seed
+    minima) -> id-only band self-join -> exact-Jaccard verification.
+    ``hash_family="xxhash64"`` is the production path; Jaccard over hashed
+    shingles equals string-shingle Jaccard up to negligible collision
+    probability.  ``hash_family="md5"`` makes every value reproducible in
+    DuckDB.
+
+    ``persist_intermediate=True`` caches the signature table, which feeds
+    the band buckets and both verification joins; the cached blocks outlive
+    the returned plan (in a multi-stage production pipeline this is a
+    written table).  ``False`` keeps the plan pure dataflow for callers that
+    run many invocations in one session (the oracle gate), where cached
+    blocks would otherwise accumulate; the barrier terms below still make
+    the shingle pass run once.
+
+    NULL and empty text: a NULL text tokenizes to a NULL array, whose one
+    position takes the empty string as its shingle, the same single shingle
+    an empty text has.  So every NULL-text or empty-text document pairs
+    with every other one at jaccard 1.0, in both families and both modes."""
+    if hash_family not in _MINHASH_FAMILIES:
+        raise ValueError(
+            "hash_family must be one of %s, got %r"
+            % (sorted(_MINHASH_FAMILIES), hash_family)
         )
+    shingle, seed_min, band_key = _MINHASH_FAMILIES[hash_family]
     rows_per_band = num_hashes // bands
-    per_shingle = shingle_hash_table(df, id_col=id_col, text_col=text_col, k=k)
+    per_shingle = _shingle_table(df, id_col, text_col, k, shingle)
     # ONE shuffle produces both the per-doc shingle SET (for the exact
     # Jaccard verification) and the minhash signature (for banding):
-    # collect_set + the per-seed minima aggregate together, map-side partial
-    # expression trees built as single SQL strings: the column-API form
-    # crossed py4j per function call and cost ~0.3 s of DRIVER time per
-    # query construction (4x the expr form, values identical)
-    sig_shingles = (
-        per_shingle.groupBy("doc_id")
-        .agg(
-            F.expr("collect_set(g) AS shingles"),
-            *[
-                F.expr("min(xxhash64(g, %d)) AS h%d" % (seed, seed))
-                for seed in range(num_hashes)
-            ],
-        )
-        .select(
-            "doc_id",
-            "shingles",
-            F.expr(
-                "array(%s) AS sig"
-                % ", ".join("h%d" % s for s in range(num_hashes))
-            ),
-        )
+    # collect_set and the per-seed minima aggregate together, map-side
+    # partial.  Expression trees are built as SQL strings: the Column form
+    # crosses py4j per function call and cost ~0.3 s per query
+    # construction (values identical).
+    sig_shingles = per_shingle.groupBy("doc_id").agg(
+        F.expr("collect_set(g) AS shingles"),
+        F.expr(
+            "array(%s) AS sig"
+            % ", ".join(seed_min.format(seed=s) for s in range(num_hashes))
+        ),
     )
     if persist_intermediate:
-        # feeds the band buckets AND both verification joins; without
-        # materialization the plan rebuilds it three times (in a multi-stage
-        # production pipeline this is a written table)
         sig_shingles = sig_shingles.persist()
     # Pruning barrier (uncached form): Catalyst duplicates the aggregate
     # subtree into each of its three consumers and column-prunes each copy —
-    # the band copies keep only the 32 minima (HashAggregate) and the
+    # the band copies would keep only the minima (HashAggregate) and the
     # verification copies only collect_set (ObjectHashAggregate), so the
-    # corpus is shingled and aggregated TWICE even though AQE reuses
+    # corpus would be shingled and aggregated TWICE even though AQE reuses
     # byte-identical exchanges.  Keeping every copy's column set identical
     # (each consumer referencing BOTH `shingles` and the whole `sig` through
-    # value-preserving zero terms below) makes all four exchange subtrees
-    # canonically equal, and AQE executes ONE shuffle stage + three
+    # the value-preserving zero terms below) makes all four exchange
+    # subtrees canonically equal, and AQE executes ONE shuffle stage + three
     # ReusedExchange: the shingle pass runs once.  `least(0, size(shingles))`
     # and `pmod(xxhash64(sig), 1)` are always 0 but not constant-foldable
     # (plan-asserted in tests); if a future optimizer learns to fold them the
-    # plan gracefully degrades to today's two-pass shape, values unchanged.
-    shingled = sig_shingles.select(
-        "doc_id",
-        F.expr(
-            "slice(shingles, 1, size(shingles) + pmod(xxhash64(sig), 1)) AS shingles"
-        ),
-    )
-    # band buckets carry ONLY (doc_id, band, band_hash): the heavy shingle
+    # plan degrades to the two-pass shape, values unchanged.
+    #
+    # Band buckets carry ONLY (doc_id, band, band_hash): the heavy shingle
     # arrays never enter the band shuffle — at corpus scale that is the
     # difference between shuffling ids and shuffling the corpus.  The band
     # structs are unrolled literals (bands is a config int), keeping the
-    # band-key hash a codegen'd multi-arg xxhash64 over signature slots.
-    band_structs = F.expr(
-        "array(%s)"
-        % ", ".join(
-            "struct(%d + least(0, size(shingles)) AS band, xxhash64(%s) AS band_hash)"
-            % (
-                b,
-                ", ".join(
+    # band key a codegen'd hash over signature slots.
+    band_structs = ", ".join(
+        "struct(%d + least(0, size(shingles)) AS band, %s AS band_hash)"
+        % (
+            b,
+            band_key.format(
+                slots=", ".join(
                     "element_at(sig, %d)" % (b * rows_per_band + r + 1)
                     for r in range(rows_per_band)
-                ),
-            )
-            for b in range(bands)
+                )
+            ),
         )
+        for b in range(bands)
     )
     buckets = sig_shingles.select(
-        "doc_id", F.explode(band_structs).alias("bucket")
-    ).select("doc_id", "bucket.band", "bucket.band_hash")
+        "doc_id", F.inline(F.expr("array(%s)" % band_structs))
+    )
     pairs = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"),
-            F.col("r.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        buckets.toDF("doc_id_a", "band", "band_hash")
+        .join(buckets.toDF("doc_id_b", "band", "band_hash"), ["band", "band_hash"])
+        .where("doc_id_a < doc_id_b")
+        .select("doc_id_a", "doc_id_b")
+        .distinct()
     )
     # verification join re-attaches shingles only for the candidate set
+    shingled = sig_shingles.select(
+        "doc_id",
+        F.expr("slice(shingles, 1, size(shingles) + pmod(xxhash64(sig), 1))"),
+    )
     return (
-        pairs.join(
-            shingled.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("shingles_a")),
-            "doc_id_a",
-        )
-        .join(
-            shingled.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("shingles_b")),
-            "doc_id_b",
-        )
+        pairs.join(shingled.toDF("doc_id_a", "shingles_a"), "doc_id_a")
+        .join(shingled.toDF("doc_id_b", "shingles_b"), "doc_id_b")
         .select(
             "doc_id_a",
             "doc_id_b",
-            F.round(
-                F.size(F.array_intersect("shingles_a", "shingles_b"))
-                / F.size(F.array_union("shingles_a", "shingles_b")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-
-
-def portable_minhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    persist_intermediate: bool = True,
-) -> DataFrame:
-    """MinHash+LSH with an oracle-portable hash family: per-seed minima of
-    ``md5(seed || ':' || shingle)`` hex strings (lexicographic min), band
-    keys ``md5(minima joined by ',')``.
-
-    Same plan shape as :func:`minhash_candidate_pairs` (band shuffle carries
-    only ids+band keys; exact-Jaccard verification joins) but every value is
-    reproducible in ANSI SQL/DuckDB — this is the variant the driver's
-    correctness gate hash-checks; production uses the xxhash64 path.
-
-    ``persist_intermediate=False`` recomputes the shingle table instead of
-    caching it — use when the caller runs many invocations in one session
-    (repeated gate/bench runs) and cached blocks would otherwise accumulate.
-    """
-    rows_per_band = num_hashes // bands
-    shingled = df.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), k).alias("shingles"),
-    )
-    if persist_intermediate:
-        shingled = shingled.persist()
-    exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-    # single-string expression construction (same rationale as the
-    # xxhash64 path: the per-function Column form crosses py4j per call)
-    if not persist_intermediate:
-        # Uncached form: ONE combined aggregate feeds banding AND
-        # verification, with the same value-preserving pruning-barrier zero
-        # terms as :func:`minhash_candidate_pairs` (see the comment there) —
-        # without them, column pruning splits the aggregate copies into a
-        # minima flavor and a collect_set flavor and the interpreted
-        # word_shingles projection executes once per consumer (three times;
-        # the gate entry composes this query twice, so six).  collect_set
-        # over the exploded DISTINCT shingles equals the word_shingles
-        # array as a set — array_intersect/array_union sizes, and therefore
-        # every jaccard value, are identical.  (A NULL-text document has a
-        # NULL shingle array, is dropped by the explode here as it always
-        # was from the signature table, and can never appear in a pair.)
-        sig_shingles = exploded.groupBy("doc_id").agg(
-            F.expr("collect_set(shingle) AS shingles"),
-            *[
-                F.expr(
-                    "min(md5(concat_ws(':', '%d', shingle))) AS h%d"
-                    % (seed, seed)
-                )
-                for seed in range(num_hashes)
-            ],
-        )
-        all_h = ", ".join("h%d" % s for s in range(num_hashes))
-        band_structs = F.expr(
-            "array(%s)"
-            % ", ".join(
-                "struct(%d + least(0, size(shingles)) AS band,"
-                " md5(concat_ws(',', %s)) AS band_key)"
-                % (
-                    b,
-                    ", ".join(
-                        "h%d" % (b * rows_per_band + r)
-                        for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
-        buckets = sig_shingles.select(
-            "doc_id",
-            F.explode(band_structs).alias("bucket"),
-        ).select("doc_id", "bucket.band", "bucket.band_key")
-        shingled = sig_shingles.select(
-            "doc_id",
             F.expr(
-                "slice(shingles, 1, size(shingles)"
-                " + pmod(xxhash64(concat_ws(',', %s)), 1)) AS shingles"
-                % all_h
+                "round(size(array_intersect(shingles_a, shingles_b))"
+                " / size(array_union(shingles_a, shingles_b)), 6) AS jaccard"
             ),
-        )
-    else:
-        sig = exploded.groupBy("doc_id").agg(
-            *[
-                F.expr(
-                    "min(md5(concat_ws(':', '%d', shingle))) AS h%d"
-                    % (seed, seed)
-                )
-                for seed in range(num_hashes)
-            ]
-        )
-        band_structs = F.expr(
-            "array(%s)"
-            % ", ".join(
-                "struct(%d AS band, md5(concat_ws(',', %s)) AS band_key)"
-                % (
-                    b,
-                    ", ".join(
-                        "h%d" % (b * rows_per_band + r)
-                        for r in range(rows_per_band)
-                    ),
-                )
-                for b in range(bands)
-            )
-        )
-        buckets = sig.select(
-            "doc_id",
-            F.explode(band_structs).alias("bucket"),
-        ).select("doc_id", "bucket.band", "bucket.band_key")
-    pairs = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"),
-            F.col("r.doc_id").alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
-    return (
-        pairs.join(
-            shingled.select(
-                F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("shingles_a")
-            ),
-            "doc_id_a",
-        )
-        .join(
-            shingled.select(
-                F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("shingles_b")
-            ),
-            "doc_id_b",
-        )
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.round(
-                F.size(F.array_intersect("shingles_a", "shingles_b"))
-                / F.size(F.array_union("shingles_a", "shingles_b")),
-                6,
-            ).alias("jaccard"),
         )
     )
 
@@ -704,8 +434,9 @@ def embedding_near_dup_pairs(
     counterpart: the reference has no embedding operators; this is the
     LLM-training-data extension, SURVEY §9).
 
-    Plan shape mirrors :func:`minhash_candidate_pairs`: every band/bucket
-    key is a codegen'd JVM-side dot-product sign fold, ONE explode yields
+    Plan shape follows the banding half of :func:`minhash_candidate_pairs`
+    (there is no signature aggregate: every band/bucket key is a per-row
+    codegen'd JVM-side dot-product sign fold), ONE explode yields
     the ``(id, band, bucket)`` table, the self-join shuffle carries ids
     only (never the vectors), and the exact cosine verifies candidates
     after joining the vectors back onto the candidate set — at corpus scale

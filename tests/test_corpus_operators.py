@@ -35,6 +35,39 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.fixture(scope="module")
+def near_dup_corpus():
+    """600 generated pages (seed 42) plus 40 planted near-duplicates, each a
+    copy of page ``15 * i`` with one token replaced (ids 10000+), and 40
+    partial copies of page ``15 * i + 7`` with 5-20% of tokens replaced
+    (ids 20000+, jaccard ~0.2-0.9).  Banding finds only some of the partial
+    copies, and which ones depends on the exact hash values, so a change to
+    the hash family changes the pair set.  Bodies are fixed at 3
+    paragraphs: the DuckDB MinHash replica's shingle list comprehension is
+    quadratic in document length, and the 50x-long tail pages would take it
+    from ~4 s to ~50 s per query."""
+    import random
+
+    from sciencebeam_trainer_grobid_tools_spark.sources.corpus import (
+        generate_document,
+    )
+
+    rows = [(i, generate_document(42, i, 3)["text"]) for i in range(600)]
+    rng = random.Random(7)
+    for i in range(40):
+        toks = rows[i * 15][1].split(" ")
+        toks[rng.randrange(len(toks))] = "planted%d" % i
+        rows.append((10_000 + i, " ".join(toks)))
+    for i in range(40):
+        rate = (0.05, 0.1, 0.15, 0.2)[i % 4]
+        toks = [
+            "partial%d" % j if rng.random() < rate else tok
+            for j, tok in enumerate(rows[i * 15 + 7][1].split(" "))
+        ]
+        rows.append((20_000 + i, " ".join(toks)))
+    return rows
+
+
 class TestDedup:
     def test_exact_duplicate_groups(self, docs):
         groups = dedup.exact_duplicate_groups(docs).collect()
@@ -54,29 +87,80 @@ class TestDedup:
         near = pairs.get((0, 2)) or pairs.get((1, 2))
         assert near is not None and 0.3 < near < 1.0
 
-    def test_minhash_sql_path_equals_column_path(self, spark, docs):
-        """The uncached form is built as one SQL string; the cached form
-        builds the same query through the Column API.  Same rows, columns
-        and jaccard values — the SQL text must stay expression-identical."""
-        a = sorted(
-            map(
-                tuple,
-                dedup.minhash_candidate_pairs(
-                    docs, k=3, num_hashes=16, bands=8, persist_intermediate=False
-                ).collect(),
-            )
+    @pytest.mark.parametrize("hash_family", ["xxhash64", "md5"])
+    def test_minhash_persisted_equals_uncached(self, spark, hash_family):
+        """``persist_intermediate`` only decides whether the signature table
+        is cached: both modes give the same rows, columns and jaccard
+        values.  Fresh rows per family, and the uncached run collects before
+        the persisted one, so no cached plan is substituted into it."""
+        base = "the quick brown fox jumps over the lazy dog near the river bank"
+        local = spark.createDataFrame(
+            [
+                (0, base + " " + hash_family),
+                (1, base + " " + hash_family),
+                (2, base.replace("lazy", "sleepy") + " " + hash_family),
+                (3, "completely different content about spark query engines"),
+            ],
+            "doc_id long, text string",
         )
-        b = sorted(
-            map(
-                tuple,
-                dedup.minhash_candidate_pairs(
-                    docs, k=3, num_hashes=16, bands=8, persist_intermediate=True
-                ).collect(),
+        rows = [
+            sorted(
+                map(
+                    tuple,
+                    dedup.minhash_candidate_pairs(
+                        local, k=3, num_hashes=16, bands=8,
+                        persist_intermediate=persist, hash_family=hash_family,
+                    ).collect(),
+                )
             )
-        )
-        assert a == b and len(a) > 0
+            for persist in (False, True)
+        ]
+        assert rows[0] == rows[1]
+        assert (0, 1, 1.0) in rows[0]
 
-    def test_minhash_uncached_single_shingle_pass(self, spark, docs):
+    @pytest.mark.parametrize("persist", [False, True])
+    @pytest.mark.parametrize("hash_family", ["xxhash64", "md5"])
+    def test_minhash_null_and_empty_text(self, spark, hash_family, persist):
+        """A NULL text gets the empty-string shingle, the one an empty text
+        has, so NULL- and empty-text documents pair at jaccard 1.0 in both
+        families and both modes; case and newlines fold before shingling."""
+        rows = [
+            (0, None),
+            (1, ""),
+            (2, None),
+            (3, "Short Text"),
+            (4, "short text"),
+            (5, "one two"),
+            (6, "alpha beta\ngamma delta epsilon zeta"),
+            (7, "ALPHA beta gamma delta epsilon zeta"),
+            (8, "alpha beta gamma delta epsilon eta"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = sorted(
+            map(
+                tuple,
+                dedup.minhash_candidate_pairs(
+                    df, k=3, num_hashes=16, bands=8,
+                    persist_intermediate=persist, hash_family=hash_family,
+                ).collect(),
+            )
+        )
+        assert got == [
+            (0, 1, 1.0),
+            (0, 2, 1.0),
+            (1, 2, 1.0),
+            (3, 4, 1.0),
+            (6, 7, 1.0),
+            (6, 8, 0.6),
+            (7, 8, 0.6),
+        ]
+
+    def test_minhash_unknown_hash_family_raises(self, docs):
+        with pytest.raises(ValueError, match="hash_family"):
+            dedup.minhash_candidate_pairs(docs, hash_family="sha1")
+
+    @pytest.mark.parametrize("hash_family", ["xxhash64", "md5"])
+    def test_minhash_uncached_single_shingle_pass(self, spark, hash_family):
         """Plan pin for the round-11 single-pass shape: with
         ``persist_intermediate=False`` the pruning-barrier terms keep every
         consumer's copy of the sig/shingles aggregate canonically identical,
@@ -95,7 +179,8 @@ class TestDedup:
             "doc_id long, text string",
         )
         df = dedup.minhash_candidate_pairs(
-            local, k=3, num_hashes=16, bands=8, persist_intermediate=False
+            local, k=3, num_hashes=16, bands=8, persist_intermediate=False,
+            hash_family=hash_family,
         )
         df.collect()
         plan = df._jdf.queryExecution().explainString(
@@ -114,6 +199,39 @@ class TestDedup:
             reused,
             final,
         )
+
+    @pytest.mark.parametrize("num_hashes,bands", [(8, 4), (32, 8)])
+    def test_md5_family_differential_vs_duckdb(
+        self, spark, near_dup_corpus, num_hashes, bands
+    ):
+        """The md5 family's pairs equal the DuckDB replica the oracle gate
+        compares against, at both gate parameter sets, on generated pages
+        plus planted near-duplicates."""
+        import duckdb
+        import pandas as pd
+
+        import __spark_entry__
+
+        con = duckdb.connect()
+        con.register(
+            "documents", pd.DataFrame(near_dup_corpus, columns=["doc_id", "text"])
+        )
+        expected = sorted(
+            con.sql(__spark_entry__._minhash_portable_sql(num_hashes, bands)).fetchall()
+        )
+        df = spark.createDataFrame(near_dup_corpus, "doc_id long, text string")
+        got = sorted(
+            map(
+                tuple,
+                dedup.minhash_candidate_pairs(
+                    df, k=5, num_hashes=num_hashes, bands=bands,
+                    persist_intermediate=False, hash_family="md5",
+                ).collect(),
+            )
+        )
+        planted = {(i * 15, 10_000 + i) for i in range(40)}
+        assert planted <= {(a, b) for a, b, _ in got}
+        assert got == expected
 
     def test_ngram_jaccard_exact_baseline(self, docs):
         pairs = {
